@@ -28,6 +28,7 @@ from smart_data_lake_spark.dataobjects.base import (
     CanCreateDataFrame,
     CanCreateStreamingDataFrame,
     CanHandlePartitions,
+    CanMergeDataFrame,
     CanWriteDataFrame,
     CanWriteStreamingDataFrame,
     DataObject,
@@ -45,9 +46,10 @@ from smart_data_lake_spark.expectations import (
     setup_observation,
     validate_expectations,
 )
-from smart_data_lake_spark.partitions import PartitionValues
+from smart_data_lake_spark.partitions import PartitionValues, project_partition_values
 from smart_data_lake_spark.save_modes import SaveMode
 from smart_data_lake_spark.subfeed import SparkSubFeed
+from smart_data_lake_spark.transformers.df_transformers import DfTransformer
 
 
 class NoDataToProcessWarning(Exception):
@@ -67,8 +69,14 @@ class Action(abc.ABC):
         execution_condition: Any = None,  # callable: list[SparkSubFeed] -> bool
         metrics_fail_condition: Any = None,  # callable: dict -> str | None
         metadata: dict[str, Any] | None = None,
+        input_ids: list[str] | None = None,
+        output_ids: list[str] | None = None,
     ) -> None:
         self.id = id
+        # the DataObjects this action reads and writes: the DAG's edges run
+        # from the writer of a DataObject to each of its readers
+        self.input_ids = list(input_ids or [])
+        self.output_ids = list(output_ids or [])
         self.registry = registry
         self.execution_condition = execution_condition
         self.metrics_fail_condition = metrics_fail_condition
@@ -83,14 +91,12 @@ class Action(abc.ABC):
             registry.register_action(self)
 
     @property
-    @abc.abstractmethod
-    def input_ids(self) -> list[str]:
-        ...
+    def main_input_id(self) -> str:
+        return self.input_ids[0]
 
     @property
-    @abc.abstractmethod
-    def output_ids(self) -> list[str]:
-        ...
+    def main_output_id(self) -> str:
+        return self.output_ids[0]
 
     def _do(self, do_id: str) -> DataObject:
         assert self.registry is not None, f"({self.id}) registry not set"
@@ -218,8 +224,7 @@ class DataFrameAction(Action):
         # against input_ids because a typo would otherwise SILENTLY apply
         # the filter to the input meant to be exempt
         self.input_ids_to_ignore_filter = input_ids_to_ignore_filter or []
-        # (validated against input_ids in _enrich_inputs — subclasses define
-        # their input ids AFTER this base constructor runs)
+        # (validated against input_ids in _enrich_inputs)
         self.persist = persist
         self.constraints = constraints or []
         self.expectations = expectations or []
@@ -232,14 +237,6 @@ class DataFrameAction(Action):
         # state so a restarted builder can reconcile orphaned checkpoints
         # (SmartDataLakeBuilder.scala:566-648 streaming run management)
         self.streaming_descriptors: dict[str, dict[str, str]] = {}
-
-    @property
-    def main_input_id(self) -> str:
-        return self.input_ids[0]
-
-    @property
-    def main_output_id(self) -> str:
-        return self.output_ids[0]
 
     @abc.abstractmethod
     def transform(self, spark: SparkSession, dfs: dict[str, DataFrame]) -> dict[str, DataFrame]:
@@ -295,6 +292,14 @@ class DataFrameAction(Action):
             df = apply_constraints(
                 df, self.constraints + list(getattr(out_do, "constraints", []) or [])
             )
+            from smart_data_lake_spark.expectations import compute_unobservable_job_metrics
+
+            # an exact count distinct cannot ride the write observation and
+            # needs its own job: run it BEFORE the write, because a merge's
+            # atomic rewrite replaces the files this plan reads, and before
+            # the observation is attached, so the observation still measures
+            # the write
+            unobservable = compute_unobservable_job_metrics(df, exps)
             df, obs = setup_observation(df, exps, f"{self.id}_{out_id}")
             if self.persist:
                 df = df.persist()
@@ -305,26 +310,16 @@ class DataFrameAction(Action):
             # aggregation with partition value transformation'): the OUTPUT
             # side sees the mapped values; the input read above used the
             # originals
-            for t in getattr(self, "transformers", None) or []:
-                mapper = getattr(t, "transform_partition_values", None)
-                if mapper is not None and pvs:
-                    pvs = list(mapper(pvs))
+            if pvs:
+                pvs = self._transform_partition_values(pvs)
             # reduce mode pvs to the WRITTEN object's declared partitions
             # (with alternative_output_id the diff keys can be foreign to the
             # direct output — an unreduced pv would aim delete_partitions at
             # non-existent hive paths and corrupt OverwriteOptimized)
-            out_parts = list(getattr(out_do, "partitions", []) or [])
-            if pvs:
-                reduced = [
-                    PartitionValues.of({k: v for k, v in pv.as_dict.items() if k in out_parts})
-                    for pv in pvs
-                ]
-                pvs = list(dict.fromkeys(pv for pv in reduced if pv.as_dict))
+            pvs = project_partition_values(pvs, getattr(out_do, "partitions", []) or [])
             assert isinstance(out_do, CanWriteDataFrame), f"({self.id}) {out_id} is not writable"
-            if self.merge_options is not None and self.save_mode == SaveMode.MERGE:
-                metrics = out_do.write_dataframe(df, pvs, self.save_mode, merge_options=self.merge_options)
-            else:
-                metrics = out_do.write_dataframe(df, pvs, self.save_mode)
+            merge = {"merge_options": self.merge_options} if self.save_mode == SaveMode.MERGE else {}
+            metrics = out_do.write_dataframe(df, pvs, self.save_mode, **merge)
             obs_metrics = {}
             if obs is not None:
                 try:
@@ -341,9 +336,7 @@ class DataFrameAction(Action):
             if isinstance(out_do, CanCreateDataFrame):
                 metrics.update(compute_scope_all_metrics_lazy(out_do, spark, exps))
                 metrics.update(self._job_partition_metrics(out_do, spark, pvs, exps))
-            from smart_data_lake_spark.expectations import compute_unobservable_job_metrics
-
-            metrics.update(compute_unobservable_job_metrics(df, exps))
+            metrics.update(unobservable)
             metrics.update(self._action_level_input_metrics(spark, dfs))
             if getattr(out_do, "housekeeping_mode", None) is not None:
                 metrics.update(out_do.housekeeping_mode.post_write(spark, out_do))
@@ -402,14 +395,7 @@ class DataFrameAction(Action):
         ):
             # inject the transformer chain's pv mapping into the mode so its
             # diff runs in the output's partition grain
-            def _pv_chain(pvs: list) -> list:
-                for t in getattr(self, "transformers", None) or []:
-                    mapper = getattr(t, "transform_partition_values", None)
-                    if mapper is not None:
-                        pvs = list(mapper(pvs))
-                return pvs
-
-            self.execution_mode.partition_values_transform = _pv_chain
+            self.execution_mode.partition_values_transform = self._transform_partition_values
         return self.execution_mode.apply(
             spark,
             self._do(self.main_input_id),
@@ -417,6 +403,22 @@ class DataFrameAction(Action):
             main_sf.partition_values if main_sf else [],
             self.execution_mode_state,
         )
+
+    def _transform_partition_values(self, pvs: list[PartitionValues]) -> list[PartitionValues]:
+        """Map partition values through the transformer chain's
+        transform_partition_values hooks, input grain → output grain."""
+        for t in getattr(self, "transformers", None) or []:
+            mapper = getattr(t, "transform_partition_values", None)
+            if mapper is not None:
+                pvs = list(mapper(pvs))
+        return pvs
+
+    def _read_existing(self, spark: SparkSession, do_id: str) -> DataFrame | None:
+        """The DataObject's current data, or None while it does not exist."""
+        do = self._do(do_id)
+        if getattr(do, "exists", lambda s: False)(spark):
+            return do.get_dataframe(spark)  # type: ignore[attr-defined]
+        return None
 
     def _enrich_inputs(
         self,
@@ -460,40 +462,30 @@ class DataFrameAction(Action):
             # an unpartitioned input ignores run-level pv filters entirely,
             # and pv entries are reduced to the input's partition columns
             do_parts = list(getattr(in_do, "partitions", []) or [])
-            if pvs and do_parts:
-                reduced = []
+            pvs = project_partition_values(pvs, do_parts)
+            # fail on reading a MISSING partition (CopyActionTest:530,
+            # DataObject.assertPartitionsExisting): enforced only when
+            # the pv keys form an INIT (prefix) of the declared partition
+            # columns — a non-prefix pv set (e.g. only the 2nd column)
+            # cannot be checked against hive paths and passes through
+            if phase == "exec" and isinstance(in_do, CanHandlePartitions):
+                existing = None
                 for pv in pvs:
-                    kept = {k: v for k, v in pv.as_dict.items() if k in do_parts}
-                    if kept:
-                        reduced.append(PartitionValues.of(kept))
-                # dedupe after reduction (several pvs may collapse onto one);
-                # PartitionValues is hashable on its canonical sorted tuple
-                pvs = list(dict.fromkeys(reduced))
-                # fail on reading a MISSING partition (CopyActionTest:530,
-                # DataObject.assertPartitionsExisting): enforced only when
-                # the pv keys form an INIT (prefix) of the declared partition
-                # columns — a non-prefix pv set (e.g. only the 2nd column)
-                # cannot be checked against hive paths and passes through
-                if phase == "exec" and isinstance(in_do, CanHandlePartitions):
-                    existing = None
-                    for pv in pvs:
-                        keys = set(pv.as_dict)
-                        # PartitionValues stores keys sorted — compare as a
-                        # SET against the leading partition columns
-                        if keys != set(do_parts[: len(keys)]):
-                            continue  # not an init of the partition columns
-                        if existing is None:
-                            existing = in_do.list_partitions(spark)
-                        prefix_match = any(
-                            all(str(e.as_dict.get(k)) == str(v) for k, v in pv.as_dict.items())
-                            for e in existing
+                    keys = set(pv.as_dict)
+                    # PartitionValues stores keys sorted — compare as a
+                    # SET against the leading partition columns
+                    if keys != set(do_parts[: len(keys)]):
+                        continue  # not an init of the partition columns
+                    if existing is None:
+                        existing = in_do.list_partitions(spark)
+                    prefix_match = any(
+                        all(str(e.as_dict.get(k)) == str(v) for k, v in pv.as_dict.items())
+                        for e in existing
+                    )
+                    if not prefix_match:
+                        raise AssertionError(
+                            f"({self.id}) partition {pv.as_dict} does not exist in {in_id}"
                         )
-                        if not prefix_match:
-                            raise AssertionError(
-                                f"({self.id}) partition {pv.as_dict} does not exist in {in_id}"
-                            )
-            elif pvs:
-                pvs = []
             streaming_mode = isinstance(self.execution_mode, SparkStreamingMode)
             stream_ids = self.streaming_input_ids or [self.main_input_id]
             if (
@@ -698,6 +690,60 @@ class DataFrameAction(Action):
                 "records_written": sum(_rows(p) for p in progress),
             }
         return SparkSubFeed(data_object_id=out_id, metrics=self.runtime_metrics.get(out_id, {}))
+
+
+class KeyedOutputAction(DataFrameAction):
+    """Base of the actions maintaining a table keyed by its output's primary
+    key (Historize, Deduplicate). With `merge_mode_enable` they upsert through
+    SaveMode.MERGE, so the output must support it: an overwrite of only the
+    new and changed rows would drop every unchanged key."""
+
+    def __init__(
+        self,
+        id: str,
+        input_id: str,
+        output_id: str,
+        transformers: list[DfTransformer] | None = None,
+        merge_mode_enable: bool = False,
+        reference_timestamp: datetime.datetime | None = None,
+        **kwargs: Any,
+    ) -> None:
+        super().__init__(id=id, input_ids=[input_id], output_ids=[output_id], **kwargs)
+        self.transformers = transformers or []
+        self.merge_mode_enable = merge_mode_enable
+        self.reference_timestamp = reference_timestamp
+        self._validate_pk_early()
+
+    def _validate_pk_early(self) -> None:
+        """Fail at CONSTRUCTION when the output table declares no primary key
+        (HistorizeActionTest/DeduplicateActionTest 'early validation that
+        output primary key exists' — the reference intercepts at the
+        constructor, not first exec). Only enforced when the registry can
+        already resolve the output; config-driven construction always can."""
+        try:
+            out_do = self._do(self.main_output_id)
+        except Exception:  # noqa: BLE001 — DO registered later: exec re-checks
+            return
+        table = getattr(out_do, "table", None)
+        if table is not None and not table.primary_key:
+            raise ValueError(
+                f"({self.id}) output table of {type(self).__name__} needs a primary key"
+            )
+
+    def _pks(self) -> list[str]:
+        table = getattr(self._do(self.main_output_id), "table", None)
+        if table is None or not table.primary_key:
+            raise ValueError(f"({self.id}) output DataObject needs a primary key")
+        return table.primary_key
+
+    def exec(self, spark, subfeeds):
+        if self.merge_mode_enable:
+            if not isinstance(self._do(self.main_output_id), CanMergeDataFrame):
+                raise ValueError(
+                    f"({self.id}) merge_mode_enable requires an output supporting SaveMode.MERGE"
+                )
+            self.save_mode = SaveMode.MERGE
+        return super().exec(spark, subfeeds)
 
 
 def compute_scope_all_metrics_lazy(out_do, spark, expectations) -> dict[str, Any]:

@@ -25,35 +25,25 @@ class CopyAction(DataFrameAction):
         delete_data_after_read: bool = False,
         **kwargs: Any,
     ) -> None:
-        super().__init__(id=id, **kwargs)
-        self.input_id = input_id
-        self.output_id = output_id
+        super().__init__(id=id, input_ids=[input_id], output_ids=[output_id], **kwargs)
         self.transformers = transformers or []
         self.delete_data_after_read = delete_data_after_read
-
-    @property
-    def input_ids(self) -> list[str]:
-        return [self.input_id]
-
-    @property
-    def output_ids(self) -> list[str]:
-        return [self.output_id]
 
     def transform(self, spark: SparkSession, dfs: dict[str, DataFrame]) -> dict[str, DataFrame]:
         df = apply_df_transformers(
             spark,
-            dfs[self.input_id],
+            dfs[self.main_input_id],
             self.transformers,
-            options={**self.transformer_context(self.input_id, self.output_id), **self.mode_options},
+            options={**self.transformer_context(self.main_input_id, self.main_output_id), **self.mode_options},
         )
-        return {self.output_id: df}
+        return {self.main_output_id: df}
 
     def post_exec(self, spark, inputs, outputs):
         super().post_exec(spark, inputs, outputs)
         if self.delete_data_after_read:
             import shutil
 
-            in_do = self._do(self.input_id)
+            in_do = self._do(self.main_input_id)
             path = getattr(in_do, "path", None)
             if path:
                 shutil.rmtree(path, ignore_errors=True)

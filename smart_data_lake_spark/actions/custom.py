@@ -30,9 +30,7 @@ class CustomDataFrameAction(DataFrameAction):
         recursive_input_ids: list[str] | None = None,
         **kwargs: Any,
     ) -> None:
-        super().__init__(id=id, **kwargs)
-        self._input_ids = list(input_ids)
-        self._output_ids = list(output_ids)
+        super().__init__(id=id, input_ids=input_ids, output_ids=output_ids, **kwargs)
         self.transformers = transformers or []
         self._main_input_id = main_input_id
         self._main_output_id = main_output_id
@@ -40,28 +38,20 @@ class CustomDataFrameAction(DataFrameAction):
         self.recursive_input_ids = recursive_input_ids or []
 
     @property
-    def input_ids(self) -> list[str]:
-        return self._input_ids
-
-    @property
-    def output_ids(self) -> list[str]:
-        return self._output_ids
-
-    @property
     def main_input_id(self) -> str:
-        return self._main_input_id or self._input_ids[0]
+        return self._main_input_id or self.input_ids[0]
 
     @property
     def main_output_id(self) -> str:
-        return self._main_output_id or self._output_ids[0]
+        return self._main_output_id or self.output_ids[0]
 
     def transform(self, spark: SparkSession, dfs: dict[str, DataFrame]) -> dict[str, DataFrame]:
         for rid in self.recursive_input_ids:
-            rdo = self._do(rid)
-            if getattr(rdo, "exists", lambda s: False)(spark):
-                dfs[rid] = rdo.get_dataframe(spark)  # type: ignore[attr-defined]
+            existing = self._read_existing(spark, rid)
+            if existing is not None:
+                dfs[rid] = existing
         result = apply_dfs_transformers(spark, dfs, self.transformers, options=self.mode_options)
-        missing = [o for o in self._output_ids if o not in result]
+        missing = [o for o in self.output_ids if o not in result]
         if missing:
             raise ValueError(f"({self.id}) transformers produced no DataFrame for outputs {missing}")
-        return {o: result[o] for o in self._output_ids}
+        return {o: result[o] for o in self.output_ids}

@@ -36,22 +36,12 @@ class CustomFileAction(Action):
         files_per_partition: int = 10,
         **kwargs: Any,
     ) -> None:
-        super().__init__(id=id, **kwargs)
-        self.input_id = input_id
-        self.output_id = output_id
+        super().__init__(id=id, input_ids=[input_id], output_ids=[output_id], **kwargs)
         self.transform_fn = transform_fn
         self.files_per_partition = max(1, files_per_partition)
 
-    @property
-    def input_ids(self) -> list[str]:
-        return [self.input_id]
-
-    @property
-    def output_ids(self) -> list[str]:
-        return [self.output_id]
-
     def _list_input_files(self) -> list[str]:
-        src = getattr(self._do(self.input_id), "path", None)
+        src = getattr(self._do(self.main_input_id), "path", None)
         if src is None or not os.path.isdir(src):
             return []
         return sorted(
@@ -62,11 +52,11 @@ class CustomFileAction(Action):
         )
 
     def init(self, spark, subfeeds):
-        return [FileSubFeed(data_object_id=self.output_id, file_refs=self._list_input_files())]
+        return [FileSubFeed(data_object_id=self.main_output_id, file_refs=self._list_input_files())]
 
     def exec(self, spark, subfeeds):
-        src_root = getattr(self._do(self.input_id), "path")
-        dst_root = getattr(self._do(self.output_id), "path")
+        src_root = getattr(self._do(self.main_input_id), "path")
+        dst_root = getattr(self._do(self.main_output_id), "path")
         os.makedirs(dst_root, exist_ok=True)
         files = self._list_input_files()
         pairs = [
@@ -87,12 +77,12 @@ class CustomFileAction(Action):
             if pairs
             else []
         )
-        self.runtime_metrics[self.output_id] = {"files_transformed": len(written)}
+        self.runtime_metrics[self.main_output_id] = {"files_transformed": len(written)}
         self.check_metrics_fail_condition()
         return [
             FileSubFeed(
-                data_object_id=self.output_id,
+                data_object_id=self.main_output_id,
                 file_refs=list(written),
-                metrics=self.runtime_metrics[self.output_id],
+                metrics=self.runtime_metrics[self.main_output_id],
             )
         ]

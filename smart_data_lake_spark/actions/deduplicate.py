@@ -8,88 +8,45 @@ the output's MERGE (the at-scale path: touched files only).
 
 from __future__ import annotations
 
-import datetime
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smart_data_lake_spark.config import register_action_type
-from smart_data_lake_spark.actions.base import DataFrameAction, now_utc
-from smart_data_lake_spark.dataobjects.base import CanMergeDataFrame
+from smart_data_lake_spark.actions.base import KeyedOutputAction, now_utc
 from smart_data_lake_spark.historization import TS_CAPTURED, _attr_cols, deduplicate_keep_latest
-from smart_data_lake_spark.save_modes import SaveMode
 from smart_data_lake_spark.schema_evolution import evolve
-from smart_data_lake_spark.transformers.df_transformers import DfTransformer, apply_df_transformers
+from smart_data_lake_spark.transformers.df_transformers import apply_df_transformers
 
 
 @register_action_type
-class DeduplicateAction(DataFrameAction):
+class DeduplicateAction(KeyedOutputAction):
     def __init__(
         self,
         id: str,
         input_id: str,
         output_id: str,
-        transformers: list[DfTransformer] | None = None,
-        merge_mode_enable: bool = False,
         update_captured_column_only_when_changed: bool = False,
         ignore_old_deleted_columns: bool = False,
-        reference_timestamp: datetime.datetime | None = None,
         **kwargs: Any,
     ) -> None:
-        super().__init__(id=id, **kwargs)
-        self.input_id = input_id
-        self.output_id = output_id
-        self.transformers = transformers or []
-        self.merge_mode_enable = merge_mode_enable
+        # transformers, merge_mode_enable and reference_timestamp are
+        # KeyedOutputAction's
+        super().__init__(id=id, input_id=input_id, output_id=output_id, **kwargs)
         self.update_captured_column_only_when_changed = update_captured_column_only_when_changed
         self.ignore_old_deleted_columns = ignore_old_deleted_columns
-        self.reference_timestamp = reference_timestamp
-        self._validate_pk_early()
-
-    def _validate_pk_early(self) -> None:
-        """Fail at CONSTRUCTION when the output table declares no primary key
-        (DeduplicateActionTest 'early validation that output primary key
-        exists' — the reference intercepts at the constructor, not first
-        exec). Only enforced when the registry can already resolve the
-        output; config-driven construction always can."""
-        try:
-            out_do = self._do(self.output_id)
-        except Exception:  # noqa: BLE001 — DO registered later: exec re-checks
-            return
-        table = getattr(out_do, "table", None)
-        if table is not None and not table.primary_key:
-            raise ValueError(
-                f"({self.id}) output table of {type(self).__name__} needs a primary key"
-            )
-
-    @property
-    def input_ids(self) -> list[str]:
-        return [self.input_id]
-
-    @property
-    def output_ids(self) -> list[str]:
-        return [self.output_id]
-
-    def _pks(self) -> list[str]:
-        out_do = self._do(self.output_id)
-        table = getattr(out_do, "table", None)
-        if table is None or not table.primary_key:
-            raise ValueError(f"({self.id}) output DataObject needs a primary key")
-        return table.primary_key
 
     def transform(self, spark: SparkSession, dfs: dict[str, DataFrame]) -> dict[str, DataFrame]:
         df = apply_df_transformers(
             spark,
-            dfs[self.input_id],
+            dfs[self.main_input_id],
             self.transformers,
-            options={**self.transformer_context(self.input_id, self.output_id), **self.mode_options},
+            options={**self.transformer_context(self.main_input_id, self.main_output_id), **self.mode_options},
         )
         ref_ts = self.reference_timestamp or now_utc()
-        out_do = self._do(self.output_id)
-        existing = None
-        if getattr(out_do, "exists", lambda s: False)(spark):
-            existing = out_do.get_dataframe(spark)  # type: ignore[attr-defined]
+        existing = self._read_existing(spark, self.main_output_id)
+        if existing is not None:
             evo = evolve(existing, df.withColumn(TS_CAPTURED, F.lit(ref_ts)),
                          ignore_old_deleted_columns=self.ignore_old_deleted_columns)
             existing = evo.old_df
@@ -112,13 +69,8 @@ class DeduplicateAction(DataFrameAction):
             changed_or_new = (
                 nw.join(ex, pks, "left_outer").where(is_new | is_changed).select("nw.*")
             )
-            return {self.output_id: changed_or_new}
+            return {self.main_output_id: changed_or_new}
         result = deduplicate_keep_latest(
             existing, df, self._pks(), ref_ts, self.update_captured_column_only_when_changed
         )
-        return {self.output_id: result}
-
-    def exec(self, spark, subfeeds):
-        if self.merge_mode_enable and isinstance(self._do(self.output_id), CanMergeDataFrame):
-            self.save_mode = SaveMode.MERGE
-        return super().exec(spark, subfeeds)
+        return {self.main_output_id: result}

@@ -30,23 +30,13 @@ class FileTransferAction(Action):
         filename_extractor_regex: str | None = None,
         **kwargs: Any,
     ) -> None:
-        super().__init__(id=id, **kwargs)
-        self.input_id = input_id
-        self.output_id = output_id
+        super().__init__(id=id, input_ids=[input_id], output_ids=[output_id], **kwargs)
         self.overwrite = overwrite
         self.max_parallelism = max_parallelism
         self.filename_extractor_regex = filename_extractor_regex
 
-    @property
-    def input_ids(self) -> list[str]:
-        return [self.input_id]
-
-    @property
-    def output_ids(self) -> list[str]:
-        return [self.output_id]
-
     def _list_input_files(self) -> list[str]:
-        src = getattr(self._do(self.input_id), "path", None)
+        src = getattr(self._do(self.main_input_id), "path", None)
         if src is None or not os.path.isdir(src):
             return []
         return [
@@ -76,13 +66,13 @@ class FileTransferAction(Action):
 
     def init(self, spark, subfeeds):
         files = self._filter_by_partitions(self._list_input_files(), subfeeds)
-        return [FileSubFeed(data_object_id=self.output_id, file_refs=files)]
+        return [FileSubFeed(data_object_id=self.main_output_id, file_refs=files)]
 
     def exec(self, spark, subfeeds):
         from smart_data_lake_spark.actions.base import NoDataToProcessWarning
 
-        src_root = getattr(self._do(self.input_id), "path")
-        dst_root = getattr(self._do(self.output_id), "path")
+        src_root = getattr(self._do(self.main_input_id), "path")
+        dst_root = getattr(self._do(self.main_output_id), "path")
         os.makedirs(dst_root, exist_ok=True)
         files = self._filter_by_partitions(self._list_input_files(), subfeeds)
         if not files:
@@ -106,6 +96,6 @@ class FileTransferAction(Action):
 
         with ThreadPoolExecutor(max_workers=self.max_parallelism) as pool:
             copied = list(pool.map(copy, files))
-        self.runtime_metrics[self.output_id] = {"files_transferred": len(copied)}
-        return [FileSubFeed(data_object_id=self.output_id, file_refs=copied,
-                            metrics=self.runtime_metrics[self.output_id])]
+        self.runtime_metrics[self.main_output_id] = {"files_transferred": len(copied)}
+        return [FileSubFeed(data_object_id=self.main_output_id, file_refs=copied,
+                            metrics=self.runtime_metrics[self.main_output_id])]

@@ -8,14 +8,13 @@ Reference: `workflow/action/HistorizeAction.scala:89-312`; three variants:
 
 from __future__ import annotations
 
-import datetime
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smart_data_lake_spark.config import register_action_type
-from smart_data_lake_spark.actions.base import DataFrameAction, now_utc
+from smart_data_lake_spark.actions.base import KeyedOutputAction, now_utc
 from smart_data_lake_spark.historization import (
     HASH_COL,
     HIGH_TS,
@@ -28,79 +27,41 @@ from smart_data_lake_spark.historization import (
     incremental_cdc_historize_ops,
     incremental_historize_ops,
 )
-from smart_data_lake_spark.save_modes import SaveMode, SaveModeMergeOptions
 from smart_data_lake_spark.schema_evolution import evolve, project_to_schema
-from smart_data_lake_spark.transformers.df_transformers import DfTransformer, apply_df_transformers
+from smart_data_lake_spark.transformers.df_transformers import apply_df_transformers
 
 
 @register_action_type
-class HistorizeAction(DataFrameAction):
+class HistorizeAction(KeyedOutputAction):
     def __init__(
         self,
         id: str,
         input_id: str,
         output_id: str,
-        transformers: list[DfTransformer] | None = None,
         filter_clause: str | None = None,
         historize_whitelist: list[str] | None = None,
         historize_blacklist: list[str] | None = None,
-        merge_mode_enable: bool = False,
         merge_mode_cdc_column: str | None = None,
         merge_mode_cdc_deleted_value: str = "D",
         merge_mode_additional_join_predicate: str | None = None,
-        reference_timestamp: datetime.datetime | None = None,
         **kwargs: Any,
     ) -> None:
-        super().__init__(id=id, **kwargs)
-        self.input_id = input_id
-        self.output_id = output_id
-        self.transformers = transformers or []
+        # transformers, merge_mode_enable and reference_timestamp are
+        # KeyedOutputAction's
+        super().__init__(id=id, input_id=input_id, output_id=output_id, **kwargs)
         self.filter_clause = filter_clause
         self.historize_whitelist = historize_whitelist
         self.historize_blacklist = historize_blacklist
-        self.merge_mode_enable = merge_mode_enable
         self.merge_mode_cdc_column = merge_mode_cdc_column
         self.merge_mode_cdc_deleted_value = merge_mode_cdc_deleted_value
         self.merge_mode_additional_join_predicate = merge_mode_additional_join_predicate
-        self.reference_timestamp = reference_timestamp
-        self._validate_pk_early()
-
-    def _validate_pk_early(self) -> None:
-        """Fail at CONSTRUCTION when the output table declares no primary key
-        (HistorizeActionTest 'early validation that output primary key
-        exists'). Only enforced when the registry can already resolve the
-        output; exec re-checks otherwise."""
-        try:
-            out_do = self._do(self.output_id)
-        except Exception:  # noqa: BLE001
-            return
-        table = getattr(out_do, "table", None)
-        if table is not None and not table.primary_key:
-            raise ValueError(
-                f"({self.id}) output table of {type(self).__name__} needs a primary key"
-            )
-
-    @property
-    def input_ids(self) -> list[str]:
-        return [self.input_id]
-
-    @property
-    def output_ids(self) -> list[str]:
-        return [self.output_id]
-
-    def _pks(self) -> list[str]:
-        out_do = self._do(self.output_id)
-        table = getattr(out_do, "table", None)
-        if table is None or not table.primary_key:
-            raise ValueError(f"({self.id}) output DataObject needs a primary key")
-        return table.primary_key
 
     def transform(self, spark: SparkSession, dfs: dict[str, DataFrame]) -> dict[str, DataFrame]:
         df = apply_df_transformers(
             spark,
-            dfs[self.input_id],
+            dfs[self.main_input_id],
             self.transformers,
-            options={**self.transformer_context(self.input_id, self.output_id), **self.mode_options},
+            options={**self.transformer_context(self.main_input_id, self.main_output_id), **self.mode_options},
         )
         pks = self._pks()
         ref_ts = self.reference_timestamp or now_utc()
@@ -110,19 +71,13 @@ class HistorizeAction(DataFrameAction):
         if self.historize_blacklist:
             df = df.drop(*[c for c in self.historize_blacklist if c not in pks])
 
-        out_do = self._do(self.output_id)
-        existing = None
-        if getattr(out_do, "exists", lambda s: False)(spark):
-            existing = out_do.get_dataframe(spark)  # type: ignore[attr-defined]
-            if self.filter_clause:
-                # only the filtered slice of history takes part; the rest is
-                # appended untouched (HistorizeAction.filterClause)
-                untouched = existing.where(~F.expr(self.filter_clause))
-                existing = existing.where(F.expr(self.filter_clause))
-            else:
-                untouched = None
-        else:
-            untouched = None
+        existing = self._read_existing(spark, self.main_output_id)
+        untouched = None
+        if existing is not None and self.filter_clause:
+            # only the filtered slice of history takes part; the rest is
+            # appended untouched (HistorizeAction.filterClause)
+            untouched = existing.where(~F.expr(self.filter_clause))
+            existing = existing.where(F.expr(self.filter_clause))
 
         df = df.dropDuplicates(pks)  # HistorizeAction.scala:236 dropDuplicates on pk
 
@@ -158,19 +113,7 @@ class HistorizeAction(DataFrameAction):
             result = full_historize(existing, df, pks, ref_ts)
         if untouched is not None and not self.merge_mode_enable:
             result = result.unionByName(untouched, allowMissingColumns=True)
-        return {self.output_id: result}
-
-    def exec(self, spark, subfeeds):
-        if self.merge_mode_enable:
-            from smart_data_lake_spark.dataobjects.base import CanMergeDataFrame
-
-            out_do = self._do(self.output_id)
-            if not isinstance(out_do, CanMergeDataFrame):
-                raise ValueError(
-                    f"({self.id}) merge_mode_enable requires an output supporting SaveMode.MERGE"
-                )
-            self.save_mode = SaveMode.MERGE
-        return super().exec(spark, subfeeds)
+        return {self.main_output_id: result}
 
 
 def evolve_keep_technical(existing: DataFrame, target_attr_schema) -> DataFrame:

@@ -27,9 +27,7 @@ class CustomScriptAction(Action):
         shell: bool = True,
         **kwargs: Any,
     ) -> None:
-        super().__init__(id=id, **kwargs)
-        self._input_ids = input_ids or []
-        self._output_ids = output_ids or []
+        super().__init__(id=id, input_ids=input_ids, output_ids=output_ids, **kwargs)
         self.cmd = cmd
         self.env = env or {}
         # shell=False tokenizes a string cmd with CmdScript.splitCmdParameters
@@ -37,16 +35,8 @@ class CustomScriptAction(Action):
         # to a shell — the reference's CmdScript execution mode
         self.shell = shell
 
-    @property
-    def input_ids(self) -> list[str]:
-        return self._input_ids
-
-    @property
-    def output_ids(self) -> list[str]:
-        return self._output_ids
-
     def init(self, spark, subfeeds):
-        return [ScriptSubFeed(data_object_id=o) for o in self._output_ids] or [
+        return [ScriptSubFeed(data_object_id=o) for o in self.output_ids] or [
             ScriptSubFeed(data_object_id=self.id)
         ]
 
@@ -73,5 +63,5 @@ class CustomScriptAction(Action):
             raise RuntimeError(f"({self.id}) script failed rc={proc.returncode}: {proc.stderr[-2000:]}")
         self.runtime_metrics[self.id] = {"returncode": proc.returncode}
         out_params = {"stdout": proc.stdout.strip()[-4000:]}
-        outs = self._output_ids or [self.id]
+        outs = self.output_ids or [self.id]
         return [ScriptSubFeed(data_object_id=o, parameters=out_params) for o in outs]

@@ -41,6 +41,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
+from smart_data_lake_spark.actions.base import Action
 from smart_data_lake_spark.config import InstanceRegistry, load_config
 from smart_data_lake_spark.subfeed import SparkSubFeed
 
@@ -65,7 +66,7 @@ class HttpAgent:
             return json.loads(resp.read().decode("utf-8"))
 
 
-class ProxyAction:
+class ProxyAction(Action):
     """Wraps a remote action: local DAG node, remote execution.
 
     `remote_config` is the config fragment the agent needs — the wrapped
@@ -84,35 +85,14 @@ class ProxyAction:
         registry: InstanceRegistry | None = None,
         metadata: dict[str, Any] | None = None,
     ) -> None:
-        self.id = id
+        super().__init__(
+            id=id, input_ids=input_ids, output_ids=output_ids, registry=registry, metadata=metadata
+        )
         self.agent = agent
         self.remote_config = remote_config
-        self._input_ids = list(input_ids)
-        self._output_ids = list(output_ids)
-        self.registry = registry
-        self.metadata = metadata or {}
-        self.execution_mode = None
-        self.execution_mode_state: dict[str, Any] = {}
-        self.runtime_metrics: dict[str, Any] = {}
-        self.metrics_fail_condition = None
-        if registry is not None and id not in registry.actions:
-            registry.register_action(self)
-
-    @property
-    def input_ids(self) -> list[str]:
-        return self._input_ids
-
-    @property
-    def output_ids(self) -> list[str]:
-        return self._output_ids
-
-    def should_execute(self, subfeeds: list[SparkSubFeed], spark=None) -> bool:
-        return not any(sf.is_skipped for sf in subfeeds)
-
-    def check_metrics_fail_condition(self) -> None:
-        pass
 
     def post_exec(self, spark, inputs, outputs) -> None:
+        # the remote action owns its DataObjects: nothing local to release
         pass
 
     # ------------------------------------------------------------- phases

@@ -154,6 +154,7 @@ class CanWriteDataFrame(abc.ABC):
         df: DataFrame,
         partition_values: list[PartitionValues] | None = None,
         save_mode: SaveMode | None = None,
+        merge_options: SaveModeMergeOptions | None = None,
     ) -> dict[str, Any]:
         """Write and return metrics ({'records_written': n, ...})."""
 

@@ -416,6 +416,7 @@ class SparkFileDataObject(
         df: DataFrame,
         partition_values: list[PartitionValues] | None = None,
         save_mode: SaveMode | None = None,
+        merge_options: Any = None,  # unused: only CanMergeDataFrame objects merge
     ) -> dict[str, Any]:
         mode = save_mode or self.save_mode
         self.init_write(df, partition_values)
@@ -1103,6 +1104,7 @@ class AvroFileDataObject(SparkFileDataObject):
         df: DataFrame,
         partition_values: list[PartitionValues] | None = None,
         save_mode: SaveMode | None = None,
+        merge_options: Any = None,  # unused: only CanMergeDataFrame objects merge
     ) -> dict[str, Any]:
         spark = df.sparkSession
         if _native_avro_available(spark):

@@ -22,7 +22,7 @@ from smart_data_lake_spark.dataobjects.base import (
     CanHandlePartitions,
     DataObject,
 )
-from smart_data_lake_spark.partitions import PartitionValues, diff_partition_values
+from smart_data_lake_spark.partitions import PartitionValues, diff_partition_values, project_partition_values
 
 
 @dataclass
@@ -124,9 +124,8 @@ class PartitionDiffMode(ExecutionMode):
         out_parts = output_do.list_partitions(spark)
         if self.partition_col_nb is not None:
             cols = input_do.partitions[: self.partition_col_nb]
-            in_parts = sorted({PartitionValues.of({c: pv.as_dict[c] for c in cols}) for pv in in_parts},
-                              key=str)
-            out_parts = [PartitionValues.of({c: pv.as_dict.get(c) for c in cols}) for pv in out_parts]
+            in_parts = sorted(project_partition_values(in_parts, cols), key=str)
+            out_parts = project_partition_values(out_parts, cols)
         if given_partition_values:
             in_parts = [pv for pv in in_parts if pv in given_partition_values]
         if self.apply_partition_values_transform and self.partition_values_transform is not None:

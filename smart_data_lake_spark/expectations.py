@@ -13,7 +13,7 @@ separate aggregation query against the written data.
 from __future__ import annotations
 
 import abc
-from dataclasses import dataclass
+from dataclasses import InitVar, dataclass
 from enum import Enum
 from typing import Any
 
@@ -93,12 +93,19 @@ class Expectation(abc.ABC):
 
 @dataclass
 class SQLExpectation(Expectation):
-    """Named aggregate expression (SQLExpectation.scala:39)."""
+    """Named aggregate expression (SQLExpectation.scala:39). Configured as
+    `aggExpression`, which the config layer passes as `agg_expression`; the
+    camelCase keyword stays accepted from Python."""
 
-    aggExpression: str = "count(*)"
+    agg_expression: str = "count(*)"
+    aggExpression: InitVar[str | None] = None
+
+    def __post_init__(self, aggExpression: str | None) -> None:
+        if aggExpression is not None:
+            self.agg_expression = aggExpression
 
     def agg_expressions(self):
-        return [F.expr(self.aggExpression).alias(self.name)]
+        return [F.expr(self.agg_expression).alias(self.name)]
 
 
 @dataclass

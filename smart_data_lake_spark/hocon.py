@@ -243,6 +243,17 @@ class _Parser:
                 raise self._error(f"unexpected {self._peek()!r} in array")
 
     # -------------------------------------------------------------- objects
+    def _parse_root(self) -> dict[str, Any]:
+        """The root is a braced object or a field list without braces."""
+        self._skip_ws_comments()
+        if self._peek() != "{":
+            return self._parse_object(braced=False)
+        root = self._parse_object(braced=True)
+        self._skip_ws_comments()
+        if self._peek():
+            raise self._error(f"unexpected {self._peek()!r} after the root object")
+        return root
+
     def _parse_object(self, braced: bool) -> dict[str, Any]:
         if braced:
             assert self._peek() == "{"
@@ -369,7 +380,7 @@ def parse_hocon(
 ) -> dict[str, Any]:
     """Parse HOCON text → plain dict (``${a.b}`` substitutions left as
     strings for config.py's resolver; template inheritance resolved)."""
-    root = _Parser(text, base_dir, visited=_visited)._parse_object(braced=False)
+    root = _Parser(text, base_dir, visited=_visited)._parse_root()
     return _resolve_extends(root, root, lenient=True)
 
 

@@ -87,6 +87,18 @@ def apply_partition_filter(df: DataFrame, partition_values: Iterable[PartitionVa
     return df if expr is None else df.where(expr)
 
 
+def project_partition_values(
+    partition_values: Iterable[PartitionValues], cols: Iterable[str]
+) -> list[PartitionValues]:
+    """Reduce each partition to the given columns, dropping the ones left
+    empty. Duplicates are removed after the reduction (several pvs may
+    collapse onto one); PartitionValues is hashable on its canonical sorted
+    tuple, and the first-seen order is kept."""
+    keep = set(cols)
+    reduced = (PartitionValues.of({k: v for k, v in pv.values if k in keep}) for pv in partition_values)
+    return list(dict.fromkeys(pv for pv in reduced if pv.values))
+
+
 def diff_partition_values(
     input_pvs: Iterable[PartitionValues], output_pvs: Iterable[PartitionValues]
 ) -> list[PartitionValues]:

@@ -391,22 +391,12 @@ class ActionDAGRun:
 
             if not action.should_execute(inputs, spark):
                 return aid, _skipped(check_metrics=False)
-            from smart_data_lake_spark.runtime_data import (
-                RuntimeEvent,
-                SDLExecutionId,
-                SynchronousRuntimeData,
-            )
+            from smart_data_lake_spark.runtime_data import RuntimeEvent, SDLExecutionId
 
             exec_id = SDLExecutionId(self.state.run_id, self.state.attempt_id)
 
             def _event(state: str) -> None:
-                # duck-typed actions (ProxyAction) don't extend Action: give
-                # them a store lazily instead of requiring the base class
-                rd = getattr(action, "runtime_data", None)
-                if rd is None:
-                    rd = SynchronousRuntimeData(10)
-                    action.runtime_data = rd
-                rd.add_event(
+                action.runtime_data.add_event(
                     exec_id,
                     RuntimeEvent(
                         ts=datetime.datetime.now(), phase="Exec", state=state

@@ -167,6 +167,15 @@ def test_include_as_ordinary_field_name():
     assert cfg["include"] == 1 and cfg["include2"] == {"x": 2}
 
 
+def test_braced_root_object():
+    assert parse_hocon("{ a = 1 }") == {"a": 1}
+    assert parse_hocon("# header\n{\n  a { b = 2 }\n  c = [1, 2]\n}\n// trailer\n") == {
+        "a": {"b": 2}, "c": [1, 2]
+    }
+    with pytest.raises(ConfigError, match="after the root object"):
+        parse_hocon("{ a = 1 }\nb = 2")
+
+
 def test_dag_export_simplified_actions(monkeypatch, tmp_path):
     """sdl-lang DagExporter parity: the simplified-actions JSON carries
     metadata + inputIds/outputIds per action, no Spark session needed."""
